@@ -25,11 +25,18 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .etl import artifacts as A
 from .queries import artifact_templates as AT
-from .schemas import RAW_ARTIFACT
+from .schemas import ARTIFACT_COLORS, ARTIFACT_MEDIA, ARTIFACT_METADATA, RAW_ARTIFACT
 from .session import get_spark
 from .sources import rest
 
-ARTIFACT_TABLES = ("artifactmetadata", "artifactmedia", "artifactcolors")
+# The warehouse's read contract: every table is read with its declared
+# schema, so no read launches a Parquet schema-inference job.
+ARTIFACT_SCHEMAS = {
+    "artifactmetadata": ARTIFACT_METADATA,
+    "artifactmedia": ARTIFACT_MEDIA,
+    "artifactcolors": ARTIFACT_COLORS,
+}
+ARTIFACT_TABLES = tuple(ARTIFACT_SCHEMAS)
 
 
 def collect(
@@ -44,31 +51,36 @@ def collect(
     return raw
 
 
+def read_table(spark: SparkSession, workdir: str, name: str) -> DataFrame:
+    """One warehouse table, read with its declared schema."""
+    return spark.read.schema(ARTIFACT_SCHEMAS[name]).parquet(f"{workdir}/{name}")
+
+
 def insert(spark: SparkSession, workdir: str) -> dict[str, int]:
     """E2: transform (T1-T5) → columnar warehouse (replaces TiDB INSERT).
 
-    Cross-batch INSERT IGNORE semantics: new rows are anti-joined against
-    the existing table before append (etl.artifacts.dedup_primary_key).
+    Cross-batch INSERT IGNORE semantics for all three tables: rows whose
+    key (``id`` for metadata, ``objectid`` for media and colors) is already
+    in the table are dropped before append (etl.artifacts.insert_ignore).
+    Colors keep every row of a new artifact (up to 5); an artifact already
+    inserted gets no further color rows.
     """
     raw = spark.read.schema(RAW_ARTIFACT).parquet(f"{workdir}/raw")
     tables = A.transform_all(raw)
     counts: dict[str, int] = {}
     for name, df in tables.items():
         path = f"{workdir}/{name}"
-        key = "id" if name == "artifactmetadata" else "objectid"
-        if os.path.exists(path) and name != "artifactcolors":
-            existing = spark.read.parquet(path)
-            df = A.dedup_primary_key(df, key, existing=existing)
-            df.write.mode("append").parquet(path)
-        else:
-            df.write.mode("overwrite").parquet(path)
-        counts[name] = spark.read.parquet(path).count()
+        if os.path.exists(path):
+            key = "id" if name == "artifactmetadata" else "objectid"
+            df = A.insert_ignore(df, key, read_table(spark, workdir, name))
+        df.write.mode("append").parquet(path)
+        counts[name] = read_table(spark, workdir, name).count()
     return counts
 
 
 def register_views(spark: SparkSession, workdir: str) -> None:
     for name in ARTIFACT_TABLES:
-        spark.read.parquet(f"{workdir}/{name}").createOrReplaceTempView(name)
+        read_table(spark, workdir, name).createOrReplaceTempView(name)
 
 
 def query(spark: SparkSession, workdir: str, name: str) -> DataFrame:

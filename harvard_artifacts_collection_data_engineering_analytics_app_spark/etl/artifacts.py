@@ -112,19 +112,22 @@ def sanitize_floats(df: DataFrame) -> DataFrame:
     return out
 
 
+def insert_ignore(df: DataFrame, key: str, existing: DataFrame) -> DataFrame:
+    """T5 across batches: drop rows whose key is already in the target
+    table, via a left-anti join (at scale: broadcast the key set when
+    small, else shuffle-hash on the key — Spark/AQE picks)."""
+    return df.join(existing.select(key), on=key, how="left_anti")
+
+
 def dedup_primary_key(
     df: DataFrame, key: str, existing: DataFrame | None = None
 ) -> DataFrame:
     """T5: INSERT IGNORE semantics (:241,255,267).
 
-    Within-batch: keep one row per key. Cross-batch: drop keys already in
-    the target table via a left-anti join (at scale: broadcast the key set
-    when small, else shuffle-hash on the key — Spark/AQE picks).
+    Within-batch: keep one row per key. Cross-batch: :func:`insert_ignore`.
     """
     out = df.dropDuplicates([key])
-    if existing is not None:
-        out = out.join(existing.select(key), on=key, how="left_anti")
-    return out
+    return out if existing is None else insert_ignore(out, key, existing)
 
 
 def transform_all(raw: DataFrame) -> dict[str, DataFrame]:

@@ -1,9 +1,13 @@
-"""Explicit schemas — no inference anywhere.
+"""Explicit schemas.
 
 Artifact-domain schemas mirror the reference DDL
 (``harvard_artifacts_app.py:37-101``) and the transform's null semantics
 (``:157-208``): missing strings become ``''``, missing counts ``0``, while
 ``accessionyear``/``datebegin``/``dateend`` stay NULL (SURVEY.md §1.2).
+The artifact warehouse is read with ``ARTIFACT_*`` (``app.read_table``), so
+no warehouse read infers a schema; they are the only definition of its
+column types. Parquet schema inference remains only in
+``catalog.load_table``, where the physical timestamp type decides the cast.
 
 Driver-table schemas mirror the parquet footers under ``/root/testdata``
 (FIXTURES.md §B) and exist for validation + fixture generation in tests.

@@ -3,6 +3,9 @@
 from __future__ import annotations
 
 from harvard_artifacts_collection_data_engineering_analytics_app_spark import app
+from harvard_artifacts_collection_data_engineering_analytics_app_spark.etl import (
+    artifacts as A,
+)
 from harvard_artifacts_collection_data_engineering_analytics_app_spark.sources import (
     rest,
 )
@@ -32,6 +35,52 @@ def test_insert_is_idempotent_like_insert_ignore(spark, tmp_path):
     first = app.insert(spark, wd)
     second = app.insert(spark, wd)
     assert first == second
+
+
+def test_second_batch_appends_to_every_table(spark, tmp_path):
+    """A later batch of new artifacts is appended to all three tables
+    (colors included), and a query after the insert reads the new files."""
+    wd = str(tmp_path / "wd3")
+    first_batch = rest.synthetic_fetcher(200)
+
+    def shifted(page):
+        return [{**rec, "id": rec["id"] + 10_000} for rec in first_batch(page)]
+
+    app.collect(spark, wd, first_batch, target_records=200)
+    first = app.insert(spark, wd)
+    assert app.query(spark, wd, "q15").collect()[0][0] == first["artifactcolors"]
+
+    raw = app.collect(spark, wd, shifted, target_records=200)
+    second_colors = A.transform_colors(raw).count()
+    second = app.insert(spark, wd)
+    assert second["artifactmetadata"] == second["artifactmedia"] == 400
+    assert second["artifactcolors"] == first["artifactcolors"] + second_colors
+
+    colors = spark.read.parquet(f"{wd}/artifactcolors")
+    assert colors.filter("objectid < 10000").count() == first["artifactcolors"]
+    assert colors.filter("objectid >= 10000").count() == second_colors
+    assert app.query(spark, wd, "q15").collect()[0][0] == second["artifactcolors"]
+
+
+def test_query_launches_no_job_before_its_action(spark, tmp_path):
+    """The warehouse is read with its declared schemas: building a
+    template runs no Parquet schema-inference job."""
+    wd = str(tmp_path / "wd4")
+    app.collect(spark, wd, rest.synthetic_fetcher(50), target_records=50)
+    app.insert(spark, wd)
+    sc = spark.sparkContext
+    group = "test-query-build"
+    sc.setJobGroup(group, "app.query without an action")
+    try:
+        df = app.query(spark, wd, "q19")
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        df.collect()  # the group does capture the action's jobs
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        assert sc.statusTracker().getJobIdsForGroup(group) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_chart_spec_matches_reference_auto_bar(spark):

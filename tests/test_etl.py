@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import math
 
+from harvard_artifacts_collection_data_engineering_analytics_app_spark.app import (
+    ARTIFACT_SCHEMAS,
+)
 from harvard_artifacts_collection_data_engineering_analytics_app_spark.etl import (
     artifacts as A,
 )
@@ -112,3 +115,13 @@ def test_transform_all_shapes(spark):
     assert out["artifactmetadata"].count() == 1
     assert out["artifactmedia"].count() == 1
     assert out["artifactcolors"].count() == 1
+
+
+def test_transform_all_matches_declared_schemas(spark):
+    """The warehouse is read with ARTIFACT_*, so the transform must write
+    exactly those column names and types, in order."""
+    out = A.transform_all(_raw(spark, [_row(1)]))
+    assert set(out) == set(ARTIFACT_SCHEMAS)
+    for name, schema in ARTIFACT_SCHEMAS.items():
+        got = [(f.name, f.dataType) for f in out[name].schema.fields]
+        assert got == [(f.name, f.dataType) for f in schema.fields], name
