@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import sys
+
 import pytest
 import pyspark.sql.functions as F
 
@@ -2071,3 +2073,25 @@ def test_jpeg_hierarchical_unsupported_stage_is_seam_valueerror():
     payload = w.finish()
     with pytest.raises(ValueError, match="pillow|undecodable"):
         decode_image(payload, use_pil=False)
+
+
+@pytest.mark.parametrize(
+    "payload",
+    [
+        b"\xff\xd8\xff\xe0" + bytes(16),
+        b"\x89PNG\r\n\x1a\n" + bytes(16),
+        b"GIF89a" + bytes(16),
+        b"RIFF\x10\x00\x00\x00WEBPVP8L" + bytes(8),
+        b"RIFF\x10\x00\x00\x00WEBPVP8 " + bytes(8),
+        b"II*\x00" + bytes(16),
+    ],
+    ids=["jpeg", "png", "gif", "webp_lossless", "webp_lossy", "tiff"],
+)
+def test_corrupt_non_pnm_payloads_degrade_to_pillow_seam(payload, monkeypatch):
+    """A header-only payload of every format with a pure-Python decoder
+    fails that decoder and falls through to the Pillow seam, which
+    without Pillow raises the actionable ValueError (never IndexError or
+    ImportError)."""
+    monkeypatch.setitem(sys.modules, "PIL", None)
+    with pytest.raises(ValueError, match="pillow"):
+        M.decode_image(payload)
